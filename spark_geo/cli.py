@@ -7,8 +7,10 @@ Usage:
         --pages /path/pages.parquet --layer /path/layer.parquet \
         --out /path/out --res 7 [--resume] [--synth-pages N]
 
-Runs the flagship geocode -> cell -> spatial-join -> tiles pipeline
-with checkpoint/resume; prints one JSON status line.
+Runs ``pipeline.run_with_checkpoint``: the flagship's join core
+(geocode -> lon/lat point probe of the polygon layer with the cell id
+computed in the same crossing), written as parquet partitioned by
+checkpoint bucket, with resume; prints one JSON status line.
 """
 
 from __future__ import annotations

@@ -52,7 +52,21 @@ _POINT_FAST_PREDICATES = {"intersects", "within", "covered_by", "dwithin", "touc
 BROADCAST_RIGHT_LIMIT = 5_000_000
 
 
-def _collect_right(right, cols, limit, api):
+def _collect_right(right, api, right_id, right_geom, max_right_rows=None,
+                   right_lon=None, right_lat=None):
+    """Collect a broadcast API's right side to the driver, capped at
+    ``max_right_rows`` (``None`` -> BROADCAST_RIGHT_LIMIT; 0 allows
+    only an empty side).  Returns ``(ids, geoms)``, or ``(ids, (xs,
+    ys))`` of float64 coordinates (NULL -> NaN) when ``right_lon`` and
+    ``right_lat`` name the right side's point columns."""
+    if (right_lon is None) != (right_lat is None):
+        raise ValueError(f"{api}: right_lon and right_lat must be given "
+                         "together (got only one)")
+    limit = BROADCAST_RIGHT_LIMIT if max_right_rows is None else max_right_rows
+    if limit < 0:
+        raise ValueError(f"{api}: max_right_rows must be >= 0, got {limit}")
+    lonlat = right_lon is not None
+    cols = [right_id, right_lon, right_lat] if lonlat else [right_id, right_geom]
     rows = right.select(*cols).limit(limit + 1).collect()
     if len(rows) > limit:
         raise ValueError(
@@ -61,7 +75,12 @@ def _collect_right(right, cols, limit, api):
             "cell_spatial_join / cell_nearest_all (the large-by-large "
             "plans), or raise the limit explicitly if the driver has "
             "the memory")
-    return rows
+    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
+    if not lonlat:
+        return ids, [SG._loads_safe(r[1]) for r in rows]
+    xs, ys = (np.fromiter((np.nan if r[k] is None else r[k] for r in rows),
+                          np.float64, count=len(rows)) for k in (1, 2))
+    return ids, (xs, ys)
 
 
 # ---------------------------------------------------------------------------
@@ -325,11 +344,8 @@ def broadcast_spatial_join(left: DataFrame, right: DataFrame, *,
     attach more right columns."""
     if predicate is not None and predicate != "dwithin" and predicate not in PREDICATES:
         raise ValueError(f"unknown predicate {predicate!r}; one of {sorted(k for k in PREDICATES if k)}")
-    rows = _collect_right(right, [right_id, right_geom],
-                          max_right_rows or BROADCAST_RIGHT_LIMIT,
-                          "broadcast_spatial_join")
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    geoms = [SG._loads_safe(r[1]) for r in rows]
+    ids, geoms = _collect_right(right, "broadcast_spatial_join", right_id,
+                                right_geom, max_right_rows)
     tree = STRtree(geoms, leafsize=leafsize)
     bc = left.sparkSession.sparkContext.broadcast((tree, ids))
 
@@ -374,22 +390,10 @@ def broadcast_lonlat_join(left: DataFrame, right: DataFrame, *,
 
     Output: keep columns + [cell] + right_id.  At 10^12 rows this is
     the plan that matters: one Arrow roundtrip of ~16 bytes/row."""
-    limit = max_right_rows or BROADCAST_RIGHT_LIMIT
-    if right_lon is not None:
-        rows = _collect_right(right, [right_id, right_lon, right_lat],
-                              limit, "broadcast_lonlat_join")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        rx = np.fromiter((np.nan if r[1] is None else r[1]
-                          for r in rows), np.float64, count=len(rows))
-        ry = np.fromiter((np.nan if r[2] is None else r[2]
-                          for r in rows), np.float64, count=len(rows))
-        tree = STRtree.from_points(rx, ry)
-    else:
-        rows = _collect_right(right, [right_id, right_geom], limit,
-                              "broadcast_lonlat_join")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        geoms = [SG._loads_safe(r[1]) for r in rows]
-        tree = STRtree(geoms)
+    ids, side = _collect_right(right, "broadcast_lonlat_join", right_id,
+                               right_geom, max_right_rows, right_lon, right_lat)
+    tree = (STRtree.from_points(*side) if right_lon is not None
+            else STRtree(side))
     bc = left.sparkSession.sparkContext.broadcast((tree, ids))
     keep = keep or []
     cols = keep + [lon, lat]

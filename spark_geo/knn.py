@@ -54,12 +54,9 @@ def broadcast_nearest_all(left: DataFrame, right: DataFrame, *,
                           max_right_rows: int | None = None,
                           _single: bool = False) -> DataFrame:
     """All-ties nearest join; output = left columns + right_id + distance."""
-    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
-    rows = _collect_right(right, [right_id, right_geom],
-                          max_right_rows or BROADCAST_RIGHT_LIMIT,
-                          "broadcast_nearest_all")
-    ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    geoms = [SG._loads_safe(r[1]) for r in rows]
+    from .join import _collect_right
+    ids, geoms = _collect_right(right, "broadcast_nearest_all", right_id,
+                                right_geom, max_right_rows)
     tree = STRtree(geoms)
     # all-points right side -> fully vectorized distance-matrix path
     pts = None
@@ -303,24 +300,16 @@ def nearest_all_lonlat(left: DataFrame, right: DataFrame, *,
     arrays only (no tree, no Geom objects), removing the per-query
     st_point evaluation job and the object-pickle cost from the
     driver path."""
-    from .join import BROADCAST_RIGHT_LIMIT, _collect_right
-    limit = max_right_rows or BROADCAST_RIGHT_LIMIT
+    from .join import _collect_right
+    ids, side = _collect_right(right, "nearest_all_lonlat", right_id,
+                               right_geom, max_right_rows, right_lon, right_lat)
     if right_lon is not None:
-        rows = _collect_right(right, [right_id, right_lon, right_lat],
-                              limit, "nearest_all_lonlat")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        rx = np.fromiter((np.nan if r[1] is None else r[1]
-                          for r in rows), np.float64, count=len(rows))
-        ry = np.fromiter((np.nan if r[2] is None else r[2]
-                          for r in rows), np.float64, count=len(rows))
+        rx, ry = side
         kp = np.nonzero(~(np.isnan(rx) | np.isnan(ry)))[0]
         tree = None
         pts = (rx[kp], ry[kp], kp.astype(np.int64))
     else:
-        rows = _collect_right(right, [right_id, right_geom], limit,
-                              "nearest_all_lonlat")
-        ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-        geoms = [SG._loads_safe(r[1]) for r in rows]
+        geoms = side
         tree = STRtree(geoms)
         pts = None
         if len(tree) and all(geoms[i].type_id == 0 for i in tree._idx):

@@ -9,9 +9,12 @@ Invariant: extracted ``text`` is byte-identical per url — extraction
 is a JVM-side regexp over the html body, and nothing downstream
 rewrites it (verified by ``text_identity_violations``).
 
-Everything before the geometry construction stays JVM-side (regexp
-extraction, casts) so Catalyst can push filters/pruning into the scan;
-only point construction + cell assignment enter Python, Arrow-batched.
+Everything before the join stays JVM-side (regexp extraction, casts)
+so Catalyst can push filters/pruning into the scan.  Every job here
+(``flagship``, ``run_with_checkpoint``, ``streaming.stream_region_counts``)
+reaches the layer through ``pages_to_regions``: one Arrow-batched Python
+crossing carrying the lon/lat doubles, where the probe and the cell id
+are computed together.
 """
 
 from __future__ import annotations
@@ -23,7 +26,6 @@ import time
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
-from . import functions as SG
 from . import join as SJ
 from .kernel import wkb as K_wkb
 from .kernel.geom import Geom
@@ -79,7 +81,7 @@ def synth_pages(spark: SparkSession, n: int, hot_frac_denom: int = 5,
 
 
 # ---------------------------------------------------------------------------
-# extraction + geocoding (JVM-side; no Python until point construction)
+# extraction + geocoding (JVM-side; no Python until the join)
 # ---------------------------------------------------------------------------
 
 def extract_text(df: DataFrame, html_col: str = "html",
@@ -118,11 +120,6 @@ def geocode(df: DataFrame, text_col: str = "text") -> DataFrame:
     lon = F.substring_index(body, ",", -1)
     return (df.withColumn("lat", F.when(lat != "", lat.cast("double")))
               .withColumn("lon", F.when(lon != "", lon.cast("double"))))
-
-
-def to_points(df: DataFrame, lon: str = "lon", lat: str = "lat",
-              geom_col: str = "point") -> DataFrame:
-    return df.withColumn(geom_col, SG.st_point(F.col(lon), F.col(lat)))
 
 
 # ---------------------------------------------------------------------------
@@ -195,28 +192,29 @@ def salt_hot_cells(left: DataFrame, right: DataFrame, hot: DataFrame,
 # flagship job + checkpoint/resume
 # ---------------------------------------------------------------------------
 
+def pages_to_regions(pages: DataFrame, layer: DataFrame, res: int = 7,
+                     keep: list[str] | None = None) -> DataFrame:
+    """geocode → lon/lat point probe of ``layer`` (intersects) with the
+    cell id computed in the same crossing: the join core every pages
+    job shares.  Output: ``keep`` columns + cell + polygon_id.
+
+    Exactly ONE Python crossing (~16 bytes/row of lon/lat doubles
+    through Arrow); the geocode regex stays JVM-side.  There is NO
+    isNotNull filter on the geocoded columns: Catalyst would push it
+    below the projection by inlining the whole regexp-extract chain
+    into the predicate, re-running the regex per row.  The probe drops
+    NULL/NaN rows inside the worker (join._probe_batch_points), so
+    untagged pages never reach the output."""
+    return SJ.broadcast_lonlat_join(
+        geocode(pages), layer, lon="lon", lat="lat", predicate="intersects",
+        right_geom="geom", right_id="polygon_id", cell_res=res, keep=keep)
+
+
 def flagship(pages: DataFrame, layer: DataFrame, res: int = 7) -> DataFrame:
-    """The headline query: geocode pages → cells + broadcast STRtree
-    join to the polygon layer → per-region page counts.
-
-    Exactly ONE Python crossing (probe + cell assignment fused in a
-    single mapInPandas over two double columns — ~16 bytes/row through
-    Arrow; geocode regexes and the final aggregate stay JVM-side), one
-    shuffle (the final groupBy).
-
-    r6 (guide §4.4-shaped fix, measured 1.8x at 6M pages): NO explicit
-    isNotNull filter on the geocoded columns — Catalyst pushes such a
-    filter below the projection by inlining the whole
-    format/regexp-extract chain into the predicate, re-evaluating the
-    expensive expressions up to 3 extra times per row.  The lon/lat
-    probe already drops NULL/NaN rows inside the worker
-    (join._probe_batch_points), so results are identical; untagged
-    rows cost 16 B of Arrow traffic instead of repeated regex work."""
-    pts = geocode(pages)
-    joined = SJ.broadcast_lonlat_join(
-        pts, layer, lon="lon", lat="lat", predicate="intersects",
-        right_geom="geom", right_id="polygon_id", cell_res=res)
-    return (joined.groupBy("polygon_id")
+    """The headline query: ``pages_to_regions`` → per-region page and
+    cell counts (one shuffle, the final groupBy)."""
+    return (pages_to_regions(pages, layer, res)
+            .groupBy("polygon_id")
             .agg(F.count(F.lit(1)).alias("n_pages"),
                  F.countDistinct("cell").alias("n_cells")))
 
@@ -224,12 +222,16 @@ def flagship(pages: DataFrame, layer: DataFrame, res: int = 7) -> DataFrame:
 def run_with_checkpoint(pages: DataFrame, layer: DataFrame, out_dir: str,
                         res: int = 7, num_parts: int = 64,
                         key_col: str = "url") -> dict:
-    """Resumable flagship run with per-partition lineage + metrics.
+    """Resumable ``pages_to_regions`` run with per-bucket lineage and
+    metrics; writes rows ``(url, lang, cell, polygon_id)`` partitioned
+    by ``part_id``.
 
-    - rows are bucketed by ``pmod(xxhash64(url), num_parts)``
-    - a manifest (JSON) records completed buckets; a rerun anti-joins
-      against it and processes only the remainder
-    - per-bucket metrics rows (count, wall time) land in
+    - rows are bucketed by ``pmod(xxhash64(key_col), num_parts)``
+    - a manifest (JSON) records completed buckets; a rerun skips them
+      and processes only the remainder
+    - once the write has committed, every bucket of this run is
+      recorded, including empty ones (no tagged page hits the layer),
+      with one metrics row each (``rows``, run wall time) in
       ``out_dir/metrics.jsonl``
     - output written with dynamic partition overwrite so a re-run of
       an interrupted bucket is idempotent."""
@@ -244,25 +246,19 @@ def run_with_checkpoint(pages: DataFrame, layer: DataFrame, out_dir: str,
     if done:
         work = work.where(~F.col("part_id").isin(done))
     t0 = time.time()
-    pts = to_points(geocode(work)).where(F.col("lon").isNotNull())
-    pts = pts.withColumn("cell", SG.st_cell_lonlat(F.col("lon"), F.col("lat"), res))
-    joined = SJ.broadcast_spatial_join(
-        pts.select("part_id", "url", "lang", "cell", "point"), layer,
-        predicate="intersects", left_geom="point", right_geom="geom",
-        right_id="polygon_id")
-    (joined.drop("point")
-     .write.mode("overwrite").partitionBy("part_id")
-     .parquet(os.path.join(out_dir, "data")))
+    out = pages_to_regions(work, layer, res, keep=["part_id", "url", "lang"])
+    out.write.mode("overwrite").partitionBy("part_id").parquet(
+        os.path.join(out_dir, "data"))
     elapsed = time.time() - t0
-    stats = (spark.read.parquet(os.path.join(out_dir, "data"))
+    # explicit schema: a run whose buckets are all empty writes no file
+    stats = (spark.read.schema(out.schema).parquet(os.path.join(out_dir, "data"))
              .groupBy("part_id").count().collect())
-    processed = sorted(int(r["part_id"]) for r in stats if int(r["part_id"]) not in done)
+    rows = {int(r["part_id"]): r["count"] for r in stats}
+    processed = sorted(set(range(num_parts)) - set(done))
     with open(os.path.join(out_dir, "metrics.jsonl"), "a") as f:
-        for r in stats:
-            if int(r["part_id"]) in processed:
-                f.write(json.dumps({"part_id": int(r["part_id"]),
-                                    "rows": r["count"],
-                                    "run_elapsed_sec": elapsed}) + "\n")
+        for p in processed:
+            f.write(json.dumps({"part_id": p, "rows": rows.get(p, 0),
+                                "run_elapsed_sec": elapsed}) + "\n")
     with open(manifest_path, "w") as f:
         json.dump({"completed_parts": sorted(set(done) | set(processed))}, f)
     return {"processed_parts": processed, "elapsed_sec": elapsed,

@@ -52,15 +52,12 @@ def stream_tile_counts(pages_stream: DataFrame, res: int = 7,
 def stream_region_counts(pages_stream: DataFrame, layer: DataFrame,
                          res: int = 7, window: str = "10 minutes",
                          watermark: str = "30 minutes") -> DataFrame:
-    """Streaming spatial join: the broadcast-STRtree probe works
-    unchanged on a stream (mapInPandas is stream-capable), then
-    event-time windowed per-region counts."""
-    from . import join as SJ
-    pts = PL.geocode(pages_stream).where(F.col("lon").isNotNull())
-    joined = SJ.broadcast_lonlat_join(
-        pts.select("url", "warc_ts", "lon", "lat"), layer,
-        lon="lon", lat="lat", predicate="intersects",
-        right_id="polygon_id", cell_res=res, keep=["url", "warc_ts"])
+    """Streaming spatial join: the pages pipeline's join core
+    (``pipeline.pages_to_regions``) works unchanged on a stream
+    (mapInPandas is stream-capable), then event-time windowed
+    per-region counts."""
+    joined = PL.pages_to_regions(pages_stream, layer, res,
+                                 keep=["url", "warc_ts"])
     return (joined.withWatermark("warc_ts", watermark)
             .groupBy(F.window("warc_ts", window).alias("w"), F.col("polygon_id"))
             .agg(F.count(F.lit(1)).alias("n_pages"))

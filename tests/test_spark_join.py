@@ -400,6 +400,35 @@ def test_broadcast_right_side_guard(spark):
                                   left_geom="point",
                                   right_id="right_id").count()
     assert n >= 0
+    # an explicit 0 is a cap of 0 rows (not the default), a negative
+    # cap is rejected, and None means BROADCAST_RIGHT_LIMIT — the same
+    # rules for all four entry points
+    lonlat_left = left.select("left_id", F.lit(1.0).alias("lon"),
+                              F.lit(2.0).alias("lat"))
+    apis = [
+        lambda r, **k: SJ.broadcast_spatial_join(
+            left, r, left_geom="point", right_id="right_id", **k),
+        lambda r, **k: SJ.broadcast_lonlat_join(
+            lonlat_left, r, right_id="right_id", keep=["left_id"], **k),
+        lambda r, **k: SK.broadcast_nearest_all(
+            left, r, left_geom="point", right_id="right_id", **k),
+        lambda r, **k: SK.nearest_all_lonlat(
+            lonlat_left, r, right_id="right_id", keep=["left_id"], **k),
+    ]
+    for api in apis:
+        with pytest.raises(ValueError, match="exceeds 0 rows"):
+            api(big, max_right_rows=0)
+        with pytest.raises(ValueError, match="must be >= 0"):
+            api(big, max_right_rows=-1)
+        assert api(big.limit(0), max_right_rows=0).count() == 0
+        assert api(big, max_right_rows=None).count() >= 0
+    # a lon/lat right side needs both columns
+    pts = big.select("right_id", SG.st_x("geom").alias("x"),
+                     SG.st_y("geom").alias("y"))
+    for api in apis[1::2]:
+        for k in ({"right_lon": "x"}, {"right_lat": "y"}):
+            with pytest.raises(ValueError, match="must be given together"):
+                api(pts, **k)
 
 
 def test_right_lonlat_parity_with_null_rows(spark):

@@ -96,11 +96,33 @@ def test_rasterize_fractions(spark):
     assert abs(d.first()["area"] - 45.0 * 45.0) < 1e-6
 
 
+def _retired_cli_rows(pages, layer, res):
+    """Reference rows of the pre-lon/lat CLI path: st_point WKB probe
+    via broadcast_spatial_join, cell id from st_cell_lonlat."""
+    from spark_geo import join as SJ
+    pts = PL.geocode(pages).where(F.col("lon").isNotNull())
+    pts = pts.select("url",
+                     SG.st_cell_lonlat(F.col("lon"), F.col("lat"), res).alias("cell"),
+                     SG.st_point(F.col("lon"), F.col("lat")).alias("point"))
+    joined = SJ.broadcast_spatial_join(pts, layer, predicate="intersects",
+                                       left_geom="point", right_geom="geom",
+                                       right_id="polygon_id")
+    return sorted(tuple(r) for r in joined.select("url", "cell", "polygon_id").collect())
+
+
+def _written_rows(spark, out):
+    data = spark.read.parquet(os.path.join(out, "data"))
+    return sorted(tuple(r) for r in data.select("url", "cell", "polygon_id").collect())
+
+
 def test_checkpoint_resume(spark, pages, tmp_path):
     layer = PL.make_world_layer(spark)
+    want = _retired_cli_rows(pages, layer, 6)
+    assert len(want) >= 2000
     out = str(tmp_path / "ckpt")
     r1 = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=8)
     assert r1["resumed_from"] == 0 and len(r1["processed_parts"]) == 8
+    assert _written_rows(spark, out) == want
     # second run: everything already done
     r2 = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=8)
     assert r2["resumed_from"] == 8 and r2["processed_parts"] == []
@@ -114,7 +136,33 @@ def test_checkpoint_resume(spark, pages, tmp_path):
         json.dump(m, f)
     r3 = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=8)
     assert len(r3["processed_parts"]) == 3
-    # final data is complete and row-count-identical to a fresh run
-    data = spark.read.parquet(os.path.join(out, "data"))
+    # the resumed output is row-identical to the fresh run and the
+    # retired path, and flagship counts the same rows
+    assert _written_rows(spark, out) == want
     fresh = PL.flagship(pages, layer, res=6)
-    assert data.count() == fresh.agg(F.sum("n_pages")).first()[0]
+    assert len(want) == fresh.agg(F.sum("n_pages")).first()[0]
+
+
+def test_checkpoint_records_empty_buckets(spark, pages, tmp_path):
+    """A bucket whose pages all miss the layer is still completed: it is
+    in the manifest with a rows=0 metrics line, and a rerun skips it."""
+    import json
+    layer = spark.createDataFrame(
+        [(0, K_wkb.dumps(Geom.box(-180.0, -90.0, -150.0, -60.0)))],
+        "polygon_id long, geom binary")
+    out = str(tmp_path / "ckpt")
+    r1 = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=16)
+    assert r1["processed_parts"] == list(range(16))
+    with open(os.path.join(out, "metrics.jsonl")) as f:
+        rows = {m["part_id"]: m["rows"] for m in map(json.loads, f)}
+    assert sorted(rows) == list(range(16))
+    data = spark.read.parquet(os.path.join(out, "data"))
+    per_part = {r["part_id"]: r["count"] for r in data.groupBy("part_id").count().collect()}
+    assert {p: n for p, n in rows.items() if n} == per_part
+    assert 0 < len(per_part) < 16          # some buckets really are empty
+    r2 = PL.run_with_checkpoint(pages, layer, out, res=6, num_parts=16)
+    assert r2["resumed_from"] == 16 and r2["processed_parts"] == []
+    # every bucket empty: no data file is written, all are still recorded
+    none = PL.run_with_checkpoint(pages, layer.limit(0), str(tmp_path / "none"),
+                                  res=6, num_parts=4)
+    assert none["processed_parts"] == [0, 1, 2, 3]
