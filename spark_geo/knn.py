@@ -10,7 +10,16 @@ Semantics from the reference:
 
 Physical plans:
 - **broadcast** (default): STRtree best-first nearest per Arrow batch
-  inside mapInPandas — no shuffle.
+  inside mapInPandas — no shuffle.  When the right side is all points
+  (``nearest_lonlat``, ``nearest_all_lonlat``, and
+  ``broadcast_nearest_all``'s all-points path) the worker runs the
+  NumPy kernel ``_nearest_all_points`` instead: a grid ring walk
+  settles probes within a few cells of data, and a lower-bound pass
+  over Z-order leaf boxes of the right points settles the rest, so a
+  far probe costs what the data near it costs, not the empty cells in
+  between.  Both passes take np.hypot over a superset of the points at
+  the minimum and keep exact-equality ties, so the output equals the
+  brute-force distance matrix bit for bit.
 - **cell ring expansion** (large✕large, point✕point): phase 1 probes
   growing ring shells until each left row sees a first hit at
   distance d₀; phase 2 probes the full cell disk of radius
@@ -107,21 +116,42 @@ def broadcast_nearest_all(left: DataFrame, right: DataFrame, *,
     return left.mapInPandas(run, schema=out_schema)
 
 
+# ring shells the grid walk visits before a probe is handed to the leaf
+# bound pass: probes within a few cells of data resolve on the grid,
+# probes beyond them are bounded by the data instead of empty cells
+_RING_SHELLS = 2
+# right points per Z-order leaf, and children per node above the leaves
+_LEAF = 32
+# more top-level boxes than this get one more level packed above them,
+# so the per-probe bound pass never scans O(m) boxes
+_TOP_MAX = 1024
+# (probe row, box) pairs per chunk of the leaf bound pass
+_PAIR_BUDGET = 1 << 20
+# relative slack on the leaf bound: rounding in a box's lower bound
+# can only admit extra candidates, never drop one
+_SLACK = 1e-9
+
+
 def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     """Vectorized all-ties nearest (the all-equidistant semantics of
     reference strtree.py:278-355).
 
-    Physical algorithm (r6, guide §1.2 "the distributed algorithm
-    first"): a uniform grid bucket index over the right points replaces
-    the (batch ✕ items) distance matrix — expected work per probe is
-    O(points per occupied cell), not O(m).  Exactness is preserved: the
-    ring expansion stops only when the running minimum provably beats
-    every unvisited cell (cell-index delta >= k+1 implies coordinate
-    distance >= k * cell_width), and the final all-ties gather
-    recomputes np.hypot over the full disk of radius ceil(best/cw)+1,
-    keeping d == best ties by exact float equality — bit-identical to
-    the former matrix path (same np.hypot, same comparisons; verified
-    in tests/test_knn_grid.py)."""
+    Two exact passes split the probes by how far they are from data.
+
+    - **Ring walk** on a uniform grid over the right points: a probe
+      whose running minimum is proven within the first ``_RING_SHELLS``
+      shells (cell-index delta >= k+1 implies coordinate distance
+      >= k * cell_width) gathers every tie from the cell disk of radius
+      ceil(best/cw)+1 around it.
+    - **Leaf bound pass** (``_leaf_bound_nearest``) for every other
+      probe, so that its cost follows the data rather than the empty
+      cells between a far probe and a clustered right side.
+
+    Both passes compute np.hypot over a superset of the points at the
+    exact minimum and keep ``d == best`` by float equality, so the
+    result is bit-identical to the (batch x items) distance matrix of
+    ``_nearest_all_points_matrix`` (verified in tests/test_knn_grid.py).
+    Probes with a NaN or infinite coordinate give no row."""
     n, m = len(xs), len(txs)
     # drop non-finite right points up front: a NaN coordinate would
     # poison the grid extent here (and poisoned the old matrix path's
@@ -132,7 +162,7 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
         txs, tys, tpos = txs[finite], tys[finite], tpos[finite]
         m = len(txs)
     if m == 0:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0),)
+        return _no_pairs()
     if m <= 64:
         # tiny trees: one (n x m) matrix is cheaper than grid setup
         return _nearest_all_points_matrix(xs, ys, txs, tys, tpos,
@@ -143,40 +173,36 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     span = max(xmax - xmin, ymax - ymin, 1e-300)
     n_side = int(np.clip(np.sqrt(m), 1, 1 << 15))
     cw = span / n_side
-    tix = np.clip(((txs - xmin) / cw).astype(np.int64), 0, n_side - 1)
-    tiy = np.clip(((tys - ymin) / cw).astype(np.int64), 0, n_side - 1)
-    tcells = tiy * n_side + tix
+
+    def cell(v, lo):
+        # clip in float: (v - lo) / cw overflows to inf for a far probe
+        # or a collapsed span, and casting that to int64 is undefined
+        return np.clip((v - lo) / cw, 0, n_side - 1).astype(np.int64)
+
+    tcells = cell(tys, ymin) * n_side + cell(txs, xmin)
     order = np.argsort(tcells, kind="stable")
-    tcells_s = tcells[order]
     txs_s, tys_s, tpos_s = txs[order], tys[order], tpos[order]
+    # n_side**2 <= m, so a dense per-cell start table costs O(m)
+    cstart = np.searchsorted(tcells[order], np.arange(n_side * n_side + 1))
 
     def gather(cells, rix):
         """flat (cell, probe_row) pairs -> per-candidate (probe_row,
-        sorted-item index) via two searchsorted calls (the same
-        candidate expansion as join._point_candidates)."""
-        lo = np.searchsorted(tcells_s, cells, side="left")
-        hi = np.searchsorted(tcells_s, cells, side="right")
-        counts = hi - lo
-        tot = int(counts.sum())
-        if tot == 0:
-            return np.empty(0, np.int64), np.empty(0, np.int64)
-        starts = np.repeat(lo, counts)
-        csum = np.cumsum(counts) - counts
-        intra = np.arange(tot, dtype=np.int64) - np.repeat(csum, counts)
-        return np.repeat(rix, counts), starts + intra
+        sorted-item index)."""
+        lo = cstart[cells]
+        counts = cstart[cells + 1] - lo
+        return np.repeat(rix, counts), _expand(lo, counts)
 
-    valid = ~(np.isnan(xs) | np.isnan(ys))
-    sxs = np.where(valid, xs, 0.0)
-    sys_ = np.where(valid, ys, 0.0)
-    gx = np.clip(((sxs - xmin) / cw).astype(np.int64), 0, n_side - 1)
-    gy = np.clip(((sys_ - ymin) / cw).astype(np.int64), 0, n_side - 1)
+    valid = np.isfinite(xs) & np.isfinite(ys)
+    gx = cell(np.where(valid, xs, xmin), xmin)
+    gy = cell(np.where(valid, ys, ymin), ymin)
 
-    # -- phase 1: ring expansion until the minimum is proven ----------
+    # -- ring walk: resolve probes within _RING_SHELLS shells ----------
     best = np.full(n, np.inf)
     alive = valid.copy()
-    k = 0
-    while alive.any() and k <= n_side:
+    for k in range(_RING_SHELLS + 1):
         rows = np.nonzero(alive)[0]
+        if not len(rows):
+            break
         if k == 0:
             sdx = np.zeros(1, np.int64)
             sdy = np.zeros(1, np.int64)
@@ -199,48 +225,46 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
         if max_distance is not None:
             done |= (k * cw) > max_distance
         alive[rows[done]] = False
-        k += 1
 
-    # -- phase 2: exact all-ties disk gather --------------------------
-    have = valid & np.isfinite(best)
+    # -- leaf bound pass for the probes the ring walk did not settle ---
+    lefts, rights, dists = [], [], []
+    far = np.nonzero(alive)[0]
+    if len(far):
+        li, ri, dd = _leaf_bound_nearest(xs[far], ys[far], best[far],
+                                         txs, tys, tpos, max_distance)
+        lefts.append(far[li])
+        rights.append(ri)
+        dists.append(dd)
+
+    # -- exact all-ties disk gather for the ring-resolved probes -------
+    have = valid & ~alive & np.isfinite(best)
     if max_distance is not None:
         have &= best <= max_distance
     rows = np.nonzero(have)[0]
-    if not len(rows):
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0),)
-    kf = np.minimum(np.ceil(best[rows] / cw), float(n_side)) \
+    # best <= k * cw for k <= _RING_SHELLS, so every disk is small
+    kf = np.minimum(np.ceil(best[rows] / cw), _RING_SHELLS + 1) \
         .astype(np.int64) + 1
-    lefts, rights, dists = [], [], []
-    order2 = np.argsort(kf)
-    budget = 1 << 22
-    i = 0
-    while i < len(rows):
-        j = i + 1
-        while j < len(rows) and (j - i + 1) * \
-                (2 * int(kf[order2[j]]) + 1) ** 2 <= budget:
-            j += 1
-        sel = order2[i:j]
-        kk = int(kf[sel].max())
-        e = np.arange(-kk, kk + 1, dtype=np.int64)
-        ddx = np.repeat(e, 2 * kk + 1)
-        ddy = np.tile(e, 2 * kk + 1)
-        rr = rows[sel]
+    kk = int(kf.max()) if len(rows) else 0
+    e = np.arange(-kk, kk + 1, dtype=np.int64)
+    ddx = np.repeat(e, 2 * kk + 1)
+    ddy = np.tile(e, 2 * kk + 1)
+    cheb = np.maximum(np.abs(ddx), np.abs(ddy))
+    step = max(1, _PAIR_BUDGET // len(e) ** 2)
+    for s in range(0, len(rows), step):
+        rr, kr = rows[s:s + step], kf[s:s + step]
         cx = gx[rr][:, None] + ddx[None, :]
         cy = gy[rr][:, None] + ddy[None, :]
         okc = (cx >= 0) & (cx < n_side) & (cy >= 0) & (cy < n_side)
-        okc &= np.maximum(np.abs(ddx), np.abs(ddy))[None, :] \
-            <= kf[sel][:, None]
+        okc &= cheb[None, :] <= kr[:, None]
         prow, item = gather((cy * n_side + cx)[okc],
                             np.repeat(rr, okc.sum(axis=1)))
-        if len(item):
-            d = np.hypot(xs[prow] - txs_s[item], ys[prow] - tys_s[item])
-            tie = d == best[prow]
-            lefts.append(prow[tie])
-            rights.append(tpos_s[item[tie]])
-            dists.append(d[tie])
-        i = j
+        d = np.hypot(xs[prow] - txs_s[item], ys[prow] - tys_s[item])
+        tie = d == best[prow]
+        lefts.append(prow[tie])
+        rights.append(tpos_s[item[tie]])
+        dists.append(d[tie])
     if not lefts:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0),)
+        return _no_pairs()
     li = np.concatenate(lefts)
     ri = np.concatenate(rights)
     dd = np.concatenate(dists)
@@ -251,9 +275,149 @@ def _nearest_all_points(xs, ys, txs, tys, tpos, max_distance):
     return li[order3], ri[order3], dd[order3]
 
 
+def _no_pairs():
+    """Empty (left index, right position, distance) result."""
+    return np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0)
+
+
+def _expand(starts, counts):
+    """Concatenated ranges [starts[i], starts[i] + counts[i])."""
+    tot = int(counts.sum())
+    csum = np.cumsum(counts) - counts
+    return (np.repeat(starts, counts)
+            + np.arange(tot, dtype=np.int64) - np.repeat(csum, counts))
+
+
+def _box_bounds(x, y, box, idx):
+    """Lower and upper bounds on np.hypot from (x, y) to the points in
+    box ``idx``: the distance to the box and to its farthest corner.
+    Float subtraction is monotone, so every point of the box is at a
+    computed distance between the two, up to np.hypot's last-ulp error
+    that ``_SLACK`` absorbs."""
+    x0, y0, x1, y1 = box
+    ax, bx = x0[idx] - x, x - x1[idx]
+    ay, by = y0[idx] - y, y - y1[idx]
+    lo = np.hypot(np.maximum(np.maximum(ax, bx), 0.0),
+                  np.maximum(np.maximum(ay, by), 0.0))
+    hi = np.hypot(np.maximum(np.abs(ax), np.abs(bx)),
+                  np.maximum(np.abs(ay), np.abs(by)))
+    return lo, hi
+
+
+def _zorder_levels(txs, tys):
+    """Sort the right points in Z-order and pack bounding boxes: level 0
+    holds one box per ``_LEAF`` consecutive points, each level above one
+    box per ``_LEAF`` boxes below, until at most ``_TOP_MAX`` remain.
+    Returns the point order and the levels, leaves first."""
+    xmin, ymin = txs.min(), tys.min()
+    span = max(txs.max() - xmin, tys.max() - ymin, 1e-300)
+
+    def spread(v):  # offset -> 16-bit cell, its bits at even positions
+        v = np.clip((v / span) * 65535.0, 0, 65535).astype(np.int64)
+        v = (v | (v << 8)) & 0x00FF00FF
+        v = (v | (v << 4)) & 0x0F0F0F0F
+        v = (v | (v << 2)) & 0x33333333
+        return (v | (v << 1)) & 0x55555555
+
+    order = np.argsort(spread(txs - xmin) | (spread(tys - ymin) << 1),
+                       kind="stable")
+    px, py = txs[order], tys[order]
+    cuts = np.arange(0, len(px), _LEAF)
+    levels = [(np.minimum.reduceat(px, cuts), np.minimum.reduceat(py, cuts),
+               np.maximum.reduceat(px, cuts), np.maximum.reduceat(py, cuts))]
+    while len(levels[-1][0]) > _TOP_MAX:
+        x0, y0, x1, y1 = levels[-1]
+        cuts = np.arange(0, len(x0), _LEAF)
+        levels.append((np.minimum.reduceat(x0, cuts),
+                       np.minimum.reduceat(y0, cuts),
+                       np.maximum.reduceat(x1, cuts),
+                       np.maximum.reduceat(y1, cuts)))
+    return order, levels
+
+
+def _leaf_bound_nearest(xs, ys, ub, txs, tys, tpos, max_distance):
+    """All-ties nearest for probes with finite coordinates by
+    branch-and-bound over Z-order leaf boxes (the reference's
+    STR-envelope nearest, strtree.c:840-1058, as whole-array passes).
+
+    ``ub`` is an upper bound per probe (its ring-walk best, or inf).
+    Level by level from the top, each probe keeps the boxes whose lower
+    bound is <= its upper bound (times 1 + ``_SLACK``), and the upper
+    bound drops to the nearest far-corner distance among them.  At the
+    leaves it drops once more, to the exact distance to the points of
+    the probe's lowest-bound leaf.  Any point at the true minimum lies
+    in a kept leaf, so np.hypot over the kept leaves' points finds the
+    minimum and all of its ``d == best`` ties."""
+    order, levels = _zorder_levels(txs, tys)
+    px, py, ppos = txs[order], tys[order], tpos[order]
+    m = len(px)
+    cap = np.inf if max_distance is None else max_distance
+    top = levels[-1]
+    n_top = len(top[0])
+    kids = np.arange(_LEAF, dtype=np.int64)
+    lefts, rights, dists = [], [], []
+    step = max(1, _PAIR_BUDGET // n_top)
+    for s in range(0, len(xs), step):
+        x, y = xs[s:s + step], ys[s:s + step]
+        lo, hi = _box_bounds(x[:, None], y[:, None], top,
+                             np.arange(n_top)[None, :])
+        bound = np.minimum(np.minimum(ub[s:s + step], hi.min(axis=1)), cap)
+        prow, node = np.nonzero(lo <= bound[:, None] * (1.0 + _SLACK))
+        lo = lo[prow, node]
+        for box in levels[-2::-1]:
+            prow, node = _children(prow, node, len(box[0]))
+            lo, hi = _box_bounds(x[prow], y[prow], box, node)
+            # prow is sorted: per-probe minima are segment reductions
+            first = _segments(prow)
+            bound[prow[first]] = np.minimum(bound[prow[first]],
+                                            np.minimum.reduceat(hi, first))
+            keep = lo <= bound[prow] * (1.0 + _SLACK)
+            prow, node, lo = prow[keep], node[keep], lo[keep]
+        # exact distance to the points of each probe's lowest-bound leaf
+        first = _segments(prow)
+        rows = prow[first]
+        leaf = node[np.lexsort((lo, prow))[first]]
+        pt = np.minimum(leaf[:, None] * _LEAF + kids, m - 1)
+        bound[rows] = np.minimum(bound[rows], np.hypot(
+            x[rows][:, None] - px[pt], y[rows][:, None] - py[pt]).min(axis=1))
+        keep = lo <= bound[prow] * (1.0 + _SLACK)
+        prow, node = prow[keep], node[keep]
+        prow, pt = _children(prow, node, m)
+        if not len(pt):
+            continue
+        d = np.hypot(x[prow] - px[pt], y[prow] - py[pt])
+        first = _segments(prow)
+        best = np.full(len(x), np.inf)
+        best[prow[first]] = np.minimum.reduceat(d, first)
+        tie = (d == best[prow]) & (d <= cap) & np.isfinite(d)
+        lefts.append(prow[tie] + s)
+        rights.append(ppos[pt[tie]])
+        dists.append(d[tie])
+    if not lefts:
+        return _no_pairs()
+    return np.concatenate(lefts), np.concatenate(rights), np.concatenate(dists)
+
+
+def _children(prow, node, size):
+    """Expand (probe row, box) pairs to (probe row, child) pairs; box j
+    holds children [j * _LEAF, (j + 1) * _LEAF) of the ``size`` below."""
+    cnt = np.minimum(node * _LEAF + _LEAF, size) - node * _LEAF
+    return np.repeat(prow, cnt), _expand(node * _LEAF, cnt)
+
+
+def _segments(sorted_keys):
+    """Start index of each run of equal values in a sorted array."""
+    if not len(sorted_keys):
+        return np.empty(0, np.int64)
+    return np.flatnonzero(np.r_[True, sorted_keys[1:] != sorted_keys[:-1]])
+
+
 def _nearest_all_points_matrix(xs, ys, txs, tys, tpos, max_distance):
-    """Small-tree fallback: chunked (batch ✕ items) distance matrix."""
+    """Small-tree fallback: chunked (batch ✕ items) distance matrix, and
+    the reference the grid kernel is tested against.  Probes with a NaN
+    or infinite coordinate give no row."""
     n, m = len(xs), len(txs)
+    valid = np.isfinite(xs) & np.isfinite(ys)
     lefts, rights, dists = [], [], []
     chunk = max(1, int(4e7 // max(m, 1)))
     for s in range(0, n, chunk):
@@ -261,7 +425,7 @@ def _nearest_all_points_matrix(xs, ys, txs, tys, tpos, max_distance):
         cx, cy = xs[s:e], ys[s:e]
         d = np.hypot(cx[:, None] - txs[None, :], cy[:, None] - tys[None, :])
         dmin = d.min(axis=1)
-        ok = ~np.isnan(dmin)
+        ok = valid[s:e].copy()
         if max_distance is not None:
             ok &= dmin <= max_distance
         ties = (d == dmin[:, None]) & ok[:, None]
@@ -270,7 +434,7 @@ def _nearest_all_points_matrix(xs, ys, txs, tys, tpos, max_distance):
         rights.append(tpos[ri])
         dists.append(d[li, ri])
     if not lefts:
-        return (np.empty(0, np.int64),) * 2 + (np.empty(0),)
+        return _no_pairs()
     return np.concatenate(lefts), np.concatenate(rights), np.concatenate(dists)
 
 
